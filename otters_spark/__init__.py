@@ -21,6 +21,7 @@ from .errors import (
     OttersError,
     PlanError,
     StoreBuildError,
+    TopKLimitError,
     TypeMismatchError,
     UnknownColumnError,
     UnsupportedStringOpError,
@@ -58,4 +59,5 @@ __all__ = [
     "EmptyQueryError",
     "MissingMetricError",
     "StoreBuildError",
+    "TopKLimitError",
 ]

@@ -66,6 +66,13 @@ class MissingMetricError(PlanError):
     """No metric configured on the plan (src/vec.rs:181-182)."""
 
 
+class TopKLimitError(OttersError):
+    """Per-query top-k asked for k above
+    ``spark.sql.optimizer.windowGroupLimitThreshold``: the rank window would
+    not be planned as a map-side WindowGroupLimit, so every scored row
+    would cross the exchange."""
+
+
 class StoreBuildError(OttersError):
     """Store construction failed validation, e.g. column length mismatch
     (src/meta.rs:159-173)."""

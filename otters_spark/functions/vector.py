@@ -1,11 +1,19 @@
 """Vector scoring as native Catalyst expressions.
 
 Replaces the reference's SIMD scoring kernels (otters
-src/vec_compute.rs:9-54) with JVM-side higher-order functions —
-``zip_with`` + ``aggregate`` stay inside whole-stage codegen, so the hot
-loop never crosses into Python. All accumulation is in float64 (the
-reference accumulates f32; we compare against the DuckDB oracle at 1e-5,
-the reference's own test tolerance, tests/vec_store_tests.rs:158,586).
+src/vec_compute.rs:9-54) with JVM-side higher-order functions
+(``zip_with`` + ``aggregate``), so the hot loop never crosses into
+Python. These are NOT compiled by whole-stage codegen: in Spark 4.1
+``ZipWith``, ``ArrayAggregate`` and ``ArrayTransform`` implement
+``CodegenFallback``, so the surrounding stage is generated but each
+kernel call is evaluated by the interpreted ``eval`` path. An unrolled
+``v[0]*q_0 + ... + v[d-1]*q_{d-1}`` sum does generate code, but at
+dim 64 it made filtered top-k queries ~3x slower: the generated methods
+grow past the JIT's compile limits and stay interpreted.
+
+All accumulation is in float64 (the reference accumulates f32; we
+compare against the DuckDB oracle at 1e-5, the reference's own test
+tolerance, tests/vec_store_tests.rs:158,586).
 
 Semantics preserved:
 
@@ -15,13 +23,14 @@ Semantics preserved:
   0.0, never NaN (src/vec.rs:365-368, src/vec_compute.rs:25-32)
 * euclidean: **squared** distance, never sqrt'd (src/vec_compute.rs:35-54)
 
-Scale note: for dim≈64 these codegen'd expressions are the fast path; an
+Scale note: for dim≈64 these JVM expressions are the fast path; an
 Arrow/pandas-UDF matmul path for very wide vectors lives in
 ``otters_spark.operators.similarity``.
 """
 
 from __future__ import annotations
 
+import json
 import math
 from typing import Iterable, Sequence
 
@@ -40,6 +49,7 @@ __all__ = [
     "inv_norm_of",
     "score_expr",
     "queries_df",
+    "queries_generator",
 ]
 
 #: metric -> default take direction (src/vec.rs:92-98: Euclidean->Min,
@@ -121,7 +131,7 @@ def euclidean_sq_expr(a, b) -> Column:
 def manhattan_expr(a, b) -> Column:
     """L1 (Manhattan) distance — the reference's roadmap metric
     (README.md:209). Like the other kernels: zip_with + aggregate in
-    float64, inside whole-stage codegen."""
+    float64."""
     return F.aggregate(
         F.zip_with(
             _c(a),
@@ -225,6 +235,12 @@ def score_expr(vec_col, q_col, metric: str, inv_norm_col=None, q_inv_norm=None) 
     raise ValueError(f"unknown metric {metric!r}; expected one of {sorted(METRICS)}")
 
 
+def _query_rows(queries: Iterable[Sequence[float]]) -> list[tuple]:
+    return [
+        (i, [float(x) for x in q], inv_norm_of(q)) for i, q in enumerate(queries)
+    ]
+
+
 _QUERY_SCHEMA = T.StructType(
     [
         T.StructField("query_id", T.IntegerType(), False),
@@ -238,7 +254,26 @@ def queries_df(spark: SparkSession, queries: Iterable[Sequence[float]]) -> DataF
     """Materialize a query batch as a tiny DataFrame (broadcast side of
     the scoring join). Mirrors ``QueryBatch`` (src/vec.rs:320-336) with
     per-query inverse norms hoisted driver-side."""
-    rows = [
-        (i, [float(x) for x in q], inv_norm_of(q)) for i, q in enumerate(queries)
-    ]
-    return spark.createDataFrame(rows, _QUERY_SCHEMA)
+    return spark.createDataFrame(_query_rows(queries), _QUERY_SCHEMA)
+
+
+def queries_generator(queries: Iterable[Sequence[float]]) -> Column:
+    """The query batch as a generator column: ``df.select("*",
+    queries_generator(qs))`` pairs every row of ``df`` with every query
+    as ``(query_id, qvec, q_inv_norm)``, the same rows
+    :func:`queries_df` holds, with inverse norms hoisted driver-side.
+
+    The batch travels as ONE JSON string literal (one JVM call for any
+    batch size); ``from_json`` of a literal is constant-folded into a
+    single array-of-structs ``Literal``, so the plan is a ``Generate``
+    over the scan: no join, no ``BroadcastExchange``, and no separate
+    Spark job to build the broadcast side. The folded literal ships
+    inside the stage's task binary, which Spark broadcasts once per
+    stage. JSON round-trips every double exactly (Python writes the
+    shortest repr; NaN and ±inf as ``NaN``/``Infinity``, which the JSON
+    reader accepts by default)."""
+    rows = _query_rows(queries)
+    payload = json.dumps(
+        [{"query_id": i, "qvec": q, "q_inv_norm": n} for i, q, n in rows]
+    )
+    return F.inline(F.from_json(F.lit(payload), T.ArrayType(_QUERY_SCHEMA)))

@@ -120,7 +120,18 @@ def bloom_probe(
     # each of the k broadcast builds re-ran the caller's ENTIRE filter
     # build, observed as 4 extra corpus scans in pipeline_bloom_decontam).
     # The table is ≤ ceil(m_bits/63) rows by construction — bounded.
-    bloom = bloom.localCheckpoint(eager=False)
+    # word_idx must be unique: each chained left join would otherwise
+    # emit one probe row per matching word row, duplicating input rows
+    # and testing each copy against only part of the word. A table
+    # unioned from two filters (or appended to) can repeat a word, so
+    # OR the bits back together per word_idx first — the same
+    # re-aggregation as the union recipe in bloom_build, over a table
+    # of at most m_bits/63 rows.
+    bloom = (
+        bloom.groupBy("word_idx")
+        .agg(F.bit_or("word").alias("word"))
+        .localCheckpoint(eager=False)
+    )
     h = F.col(value_col) if hashed else md5_long_expr(F.col(value_col))
     # Materialize the HASH once behind a Generate barrier (a 1-element
     # explode — the md5-fanout trap guard, see tests/test_suite_plans.py):

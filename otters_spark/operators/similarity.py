@@ -3,7 +3,8 @@
 Three tiers, trading exactness for scale:
 
 * **brute-force** (exact, the reference's own semantics) — the fluent
-  plan in ``otters_spark.plan``; scoring is codegen'd JVM expressions.
+  plan in ``otters_spark.plan``; scoring is JVM higher-order
+  expressions (``functions.vector``).
   Exact and embarrassingly parallel: at 100 TB it is one scan, no
   shuffle, top-k via per-partition bounded heaps.
 * **pandas/Arrow matmul** — same exact math through ``mapInPandas`` +
@@ -25,6 +26,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from ..errors import TopKLimitError
 from ..functions.vector import METRICS, dot_expr, inv_norm_expr, inv_norm_of, queries_df
 from ..store import INV_NORM_COL, VecStore
 
@@ -33,6 +35,7 @@ __all__ = [
     "maxsim_topk",
     "pandas_matmul_topk",
     "per_query_topk",
+    "check_topk_limit",
     "hyperplanes",
     "lsh_bucket_expr",
     "lsh_index",
@@ -339,6 +342,23 @@ def pandas_matmul_topk(
     return scored.orderBy(*order).limit(k)
 
 
+_WINDOW_LIMIT_CONF = "spark.sql.optimizer.windowGroupLimitThreshold"
+
+
+def check_topk_limit(spark, k: int) -> None:
+    """Raise :class:`TopKLimitError` when ``k`` is above the session's
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000; -1
+    disables the rewrite): past it the optimizer no longer plans the
+    rank window as WindowGroupLimit, and the exchange would silently
+    carry every scored row per query instead of k."""
+    limit = int(spark.conf.get(_WINDOW_LIMIT_CONF))
+    if k > limit:
+        raise TopKLimitError(
+            f"per-query top-k with k={k} exceeds {_WINDOW_LIMIT_CONF}={limit}; "
+            "the window would not pre-limit map-side — lower k or raise the threshold"
+        )
+
+
 def per_query_topk(
     scored: DataFrame,
     k: int,
@@ -352,7 +372,7 @@ def per_query_topk(
 
     One plain rank window, because on Spark 3.5+/4.x the optimizer
     plans ``row_number() <= k`` as **WindowGroupLimit Partial/Final**
-    (SPARK-37099, for k <= spark.sql.window.group.limit.threshold,
+    (SPARK-37099, for k <= spark.sql.optimizer.windowGroupLimitThreshold,
     default 1000): each map task pre-limits its partition to k rows
     per query BEFORE the exchange (a spillable local JVM sort feeds
     the limit), so the shuffle and the final per-query window see at
@@ -376,9 +396,26 @@ def per_query_topk(
 
     Ordering is the engine's window convention: (``score_col`` desc —
     or asc for distance metrics — then ``id_col`` asc). All input
-    columns are carried through unchanged."""
+    columns are carried through unchanged.
+
+    Raises :class:`TopKLimitError` for k above the window-group-limit
+    threshold (see :func:`check_topk_limit`) rather than degrade to a
+    full window."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
+    check_topk_limit(scored.sparkSession, k)
+    return _rank_limit(scored, k, query_col, score_col, id_col, ascending)
+
+
+def _rank_limit(
+    scored: DataFrame,
+    k: int,
+    query_col: str,
+    score_col: str,
+    id_col: str,
+    ascending: bool,
+) -> DataFrame:
+    """The unchecked rank window of :func:`per_query_topk`."""
     from pyspark.sql.window import Window
 
     direction = F.col(score_col).asc() if ascending else F.col(score_col).desc()
@@ -400,7 +437,7 @@ def hyperplanes(dim: int, n_planes: int = 12, seed: int = 42) -> np.ndarray:
 
 def lsh_bucket_expr(vec_col: str, planes: np.ndarray) -> F.Column:
     """Signature bucket id: bit p = sign(dot(v, plane_p)). Pure
-    codegen — each plane is a literal array folded with zip_with."""
+    JVM — each plane is a literal array folded with zip_with."""
     bucket = F.lit(0).cast("long")
     for p, plane in enumerate(planes):
         lit_plane = F.array(*[F.lit(float(x)) for x in plane])

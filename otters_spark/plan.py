@@ -7,12 +7,19 @@ Reference lifecycle (SURVEY.md §3):
 Spark realization is a single declarative pipeline::
 
     store.filter(meta_pred)                  # ← Catalyst pushes into scan
-         .crossJoin(broadcast(query_batch))  # ← tiny broadcast side
-         .withColumn('score', <codegen expr>)
+         .select('*', inline(<query batch>)) # ← one folded literal
+         .withColumn('score', <kernel expr>)
          .filter(~isnan(score) & score CMP t)
          .orderBy(score).limit(k)            # ← TakeOrderedAndProject
 
-so the reference's hand-built machinery maps 1:1 onto planner features:
+The query batch is a constant-folded array-of-structs literal
+(``functions.vector.queries_generator``, the reference's driver-side
+``QueryBatch``, src/vec.rs:320-336), so a top-k query is ONE Spark job
+of ONE stage: scan → Generate → score → per-partition top-k, merged on
+the driver. An earlier ``crossJoin(broadcast(queries_df))`` shape paid
+a second job just to broadcast the handful of query rows.
+
+The reference's hand-built machinery maps 1:1 onto planner features:
 chunk pruning = row-group pruning (src/meta.rs:646-660), rayon chunk
 parallelism = task parallelism (src/meta.rs:678-709), TopKCollector's
 adaptive threshold = per-partition bounded priority queue in
@@ -44,7 +51,7 @@ from .errors import (
     PlanError,
 )
 from .expr import Expr, compile_expr
-from .functions.vector import METRICS, queries_df, score_expr
+from .functions.vector import METRICS, queries_generator, score_expr
 from .store import INV_NORM_COL, MetaStore, VecStore
 
 __all__ = ["VecQueryPlan", "MetaQueryPlan", "QueryStats"]
@@ -387,9 +394,7 @@ class VecQueryPlan:
             base = base.filter(mask)
         if obs_candidates is not None:
             base = base.observe(obs_candidates, F.count(F.lit(1)).alias("n"))
-        spark = base.sparkSession
-        qdf = queries_df(spark, self._queries)
-        scored = base.crossJoin(F.broadcast(qdf)).withColumn(
+        scored = base.select("*", queries_generator(self._queries)).withColumn(
             "score",
             score_expr(
                 store.vec_col,

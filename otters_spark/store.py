@@ -29,6 +29,7 @@ from typing import Any, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.types import _make_type_verifier
 
 from .errors import StoreBuildError
 from .expr import _schema_dtypes
@@ -90,6 +91,25 @@ def with_row_index(df: DataFrame, name: str = "vec_id") -> DataFrame:
         ]
     )[pid]
     return pinned.withColumn(name, (off + seq).cast("long"))
+
+
+#: SQL literal suffix per integral id type, so the rendered IN list
+#: already has the column's type and analysis inserts no casts
+_INT_SUFFIX = {T.ByteType: "Y", T.ShortType: "S", T.IntegerType: "", T.LongType: "L"}
+
+
+def _sql_in_list(ids: list, id_type: T.DataType) -> str | None:
+    """SQL text of an ``IN (...)`` list for verified integral or
+    string ids; None for other id types. Strings go through a UTF-8
+    hex literal, so no quoting or escape setting
+    (``spark.sql.parser.escapedStringLiterals``) can change them; the
+    cast constant-folds back to a plain string literal."""
+    suffix = _INT_SUFFIX.get(type(id_type))
+    if suffix is not None:
+        return ", ".join(f"{v}{suffix}" for v in ids)
+    if isinstance(id_type, T.StringType):
+        return ", ".join(f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)" for v in ids)
+    return None
 
 
 @dataclass
@@ -292,20 +312,45 @@ class VecStore:
 
     def remove_rows(self, ids) -> "VecStore":
         """Drop rows by id — the remove half of the mutability roadmap
-        item. ``ids`` is a small iterable (broadcast anti-join: the
-        scan stays map-side) or a DataFrame of ids (plain anti-join —
-        the planner picks broadcast vs shuffle by size)."""
+        item. ``ids`` is either a DataFrame of ids (first column; plain
+        anti-join — the planner picks broadcast vs shuffle by size) or
+        an iterable of ids, which becomes the scan-side filter
+        ``id IS NULL OR NOT id IN (...)`` — no join and no extra Spark
+        job, so a query over the result stays one job.
+
+        The iterable keeps the anti-join's semantics: store rows with a
+        NULL id are kept, a ``None`` in ``ids`` matches nothing, and
+        duplicates are harmless. Every id is checked against the id
+        column's type with the same verifier ``createDataFrame`` runs,
+        so a mistyped id raises instead of being coerced. Integral and
+        string ids are rendered into one SQL ``IN`` list (one JVM call
+        however many ids: ``Column.isin`` pays one py4j call per id,
+        and every append re-applies the whole delete list); the
+        optimizer turns lists over 10 ids into a hash-set ``InSet``."""
         if isinstance(ids, DataFrame):
             key = ids.select(F.col(ids.columns[0]).alias(self.id_col))
+            new = self.df.join(key, self.id_col, "left_anti")
+            return type(self)(new, self.vec_col, self.id_col, self.dim)
+        id_type = self.df.schema[self.id_col].dataType
+        verify = _make_type_verifier(
+            T.StructType([T.StructField(self.id_col, id_type)])
+        )
+        keep = []
+        for i in ids:
+            verify((i,))
+            if i is not None:
+                keep.append(i)
+        keep = list(dict.fromkeys(keep))
+        if not keep:
+            return type(self)(self.df, self.vec_col, self.id_col, self.dim)
+        col = F.col(self.id_col)
+        listed = _sql_in_list(keep, id_type)
+        if listed is None:
+            hit = col.isin(keep)
         else:
-            id_type = self.df.schema[self.id_col].dataType
-            key = F.broadcast(
-                self.df.sparkSession.createDataFrame(
-                    [(i,) for i in ids],
-                    T.StructType([T.StructField(self.id_col, id_type)]),
-                )
-            )
-        new = self.df.join(key, self.id_col, "left_anti")
+            quoted = "`" + self.id_col.replace("`", "``") + "`"
+            hit = F.expr(f"{quoted} IN ({listed})")
+        new = self.df.filter(col.isNull() | ~hit)
         return type(self)(new, self.vec_col, self.id_col, self.dim)
 
     def query(self, queries: Any, metric: str = "cosine"):

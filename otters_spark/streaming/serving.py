@@ -86,7 +86,16 @@ def serve_query_stream(
     queries, run ONE batched scoring job (broadcast queries × store,
     per-query window top-k) and pass the result DataFrame to
     ``on_batch(results, batch_id)``. Returns the started
-    ``StreamingQuery`` (caller awaits/stops)."""
+    ``StreamingQuery`` (caller awaits/stops).
+
+    Raises :class:`~otters_spark.errors.TopKLimitError` before the
+    stream starts when ``k`` is above the window-group-limit threshold
+    (see ``operators.similarity.check_topk_limit``)."""
+    from ..operators.similarity import _rank_limit, check_topk_limit
+
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    check_topk_limit(store.df.sparkSession, k)
 
     def score_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -105,16 +114,15 @@ def serve_query_stream(
                 inv_norm_col=INV_NORM_COL, q_inv_norm=F.col("__qin"),
             ),
         ).filter(~F.isnan(F.col("score")))
-        # per-query top-k via operators.similarity.per_query_topk:
-        # Spark 3.5+/4.x plans the rank window as WindowGroupLimit
+        # per-query top-k, the rank window of
+        # operators.similarity.per_query_topk (k was checked once at
+        # start): Spark 3.5+/4.x plans it as WindowGroupLimit
         # Partial/Final, so each map task pre-limits to k rows per
         # query BEFORE the exchange — the shuffle never carries the
         # full scored store, and (round 12) no Python boundary sits in
         # the serving hot path. Project to the three result columns
         # first so the scan stays pruned.
-        from ..operators.similarity import per_query_topk
-
-        topk = per_query_topk(
+        topk = _rank_limit(
             scored.select(query_id_col, store.id_col, "score"),
             k,
             query_col=query_id_col,

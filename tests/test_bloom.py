@@ -109,3 +109,34 @@ def test_validation(spark):
         bloom_build(df, "v", M, k=99)
     with pytest.raises(ValueError, match="at least one word"):
         bloom_build(df, "v", 10, k=2)
+
+
+def test_probe_tolerates_repeated_word_rows(spark):
+    """A word table that repeats a word_idx (e.g. the plain union of two
+    filters, or one word split across rows) must probe exactly like its
+    bit_or-merged form: one output row per input row and the same
+    verdicts. Unmerged, every chained left join multiplied the probe
+    rows and tested each copy against only part of the word."""
+    members = _members(spark, 50)
+    filt = bloom_build(members, "v", M, K)
+    even = filt.select(
+        "word_idx", F.col("word").bitwiseAND(F.lit(0x5555555555555555)).alias("word")
+    )
+    odd = filt.select(
+        "word_idx", F.col("word").bitwiseAND(F.lit(0x2AAAAAAAAAAAAAAA)).alias("word")
+    )
+    repeated = even.union(odd).union(filt)
+    probe_in = members.union(
+        spark.range(300).select(F.concat(F.lit("s-"), F.col("id")).alias("v"))
+    )
+    want = sorted(
+        (r["v"], r["maybe_member"])
+        for r in bloom_probe(probe_in, "v", filt, M, K).collect()
+    )
+    got = sorted(
+        (r["v"], r["maybe_member"])
+        for r in bloom_probe(probe_in, "v", repeated, M, K).collect()
+    )
+    assert len(got) == 350
+    assert got == want
+    assert all(verdict for v, verdict in got if v.startswith("member-"))

@@ -895,3 +895,20 @@ def test_per_query_topk_null_keys_and_scores_match_naive(spark):
         assert got_rows == sorted(naive.collect(), key=key), ascending
         # the NULL query key group is present with its own top-5
         assert sum(1 for r in got_rows if r["query_id"] is None) == 5
+
+
+def test_per_query_topk_k_above_window_limit_raises(spark):
+    """k above spark.sql.optimizer.windowGroupLimitThreshold (default 1000)
+    would silently plan a full window that ships every scored row per
+    query through the exchange; it must fail fast with a named error.
+    k at the threshold still plans and runs."""
+    from otters_spark import TopKLimitError
+    from otters_spark.operators.similarity import per_query_topk
+
+    df = spark.createDataFrame(
+        [(0, i, float(i)) for i in range(5)],
+        "query_id int, vec_id long, score double",
+    )
+    with pytest.raises(TopKLimitError, match="k=1001"):
+        per_query_topk(df, 1001)
+    assert len(per_query_topk(df, 1000).collect()) == 5

@@ -83,3 +83,25 @@ def test_serve_query_stream_topk(spark, sf_dir, tmp_path):
     for qid, vec in qs:
         rows = sorted(by_query[qid], key=lambda r: -r["score"])
         assert rows[0]["vec_id"] == qid and rows[0]["score"] == pytest.approx(1.0)
+
+
+def test_serve_query_stream_k_above_window_limit_raises_before_start(
+    spark, sf_dir, tmp_path
+):
+    """The k limit is checked once, when serving starts — not inside
+    each micro-batch, where the failure would only surface as a dead
+    stream."""
+    from otters_spark import TopKLimitError
+
+    qdir = str(tmp_path / "queries3")
+    _write_queries(spark, qdir, _queries(spark, sf_dir, n=1))
+    before = len(spark.streams.active)
+    with pytest.raises(TopKLimitError):
+        serve_query_stream(
+            spark.readStream.schema(QUERY_SCHEMA).json(qdir),
+            _store(spark, sf_dir),
+            on_batch=lambda df, bid: None,
+            checkpoint_dir=str(tmp_path / "ckpt3"),
+            k=1001,
+        )
+    assert len(spark.streams.active) == before

@@ -303,3 +303,82 @@ def test_null_score_never_occupies_topk(spark):
     assert [r["vec_id"] for r in rows] == [0, 1]  # ragged id=2 absent
     all_rows = store.query([1.0, 0.0, 1.0], "hamming").collect()
     assert {r["vec_id"] for r in all_rows} == {0, 1}
+
+
+# --- remove_rows over an iterable: scan-side IN filter with the
+# anti-join's semantics ---
+
+
+def _ids(store):
+    return sorted(
+        (r[store.id_col] for r in store.df.select(store.id_col).collect()),
+        key=lambda v: (v is not None, v),
+    )
+
+
+def _nullable_id_store(spark):
+    df = spark.createDataFrame(
+        [(None, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 1.0]), (3, [2.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    return VecStore.from_df(df)
+
+
+def test_remove_rows_iterable_keeps_anti_join_semantics(spark):
+    """NULL store ids survive any removal, ``None`` in ``ids`` matches
+    nothing (NOT IN over a NULL would otherwise drop every row),
+    duplicates are harmless, an empty or all-None list is a no-op, and
+    the DataFrame (anti-join) form agrees on every case."""
+    store = _nullable_id_store(spark)
+    cases = [[1, None, 1, 3], [None], [], [2, 2, 2], [3, 1]]
+    for ids in cases:
+        got = _ids(store.remove_rows(iter(ids)))
+        key = spark.createDataFrame([(i,) for i in ids], "vec_id long")
+        assert got == _ids(store.remove_rows(key)), ids
+        assert got == [None] + [i for i in (1, 2, 3) if i not in ids], ids
+
+
+@pytest.mark.parametrize(
+    "ddl,ids,doomed",
+    [
+        ("long", list(range(40)), [0, 3, 7, 39, 2**62]),
+        ("int", list(range(40)), list(range(0, 40, 3))),  # > 10: hash-set IN
+        ("smallint", [-5, 0, 5], [-5, 5]),
+        ("tinyint", [-128, 0, 127], [-128]),
+        ("string", ["a'b", "c\\d", "é", "x`y", "plain", ""], ["a'b", "é", "", None]),
+        ("double", [0.5, 1.5, float("nan")], [1.5, float("nan")]),
+    ],
+)
+def test_remove_rows_iterable_per_id_type(spark, ddl, ids, doomed):
+    df = spark.createDataFrame(
+        [(i, [1.0, float(n)]) for n, i in enumerate(ids)],
+        f"vec_id {ddl}, embedding array<float>",
+    )
+    store = VecStore.from_df(df)
+    got = store.remove_rows(doomed)
+    key = spark.createDataFrame([(i,) for i in doomed], f"vec_id {ddl}")
+    assert _ids(got) == _ids(store.remove_rows(key))
+    assert got.count() == store.count() - sum(1 for i in ids if i in doomed or i != i)
+
+
+def test_remove_rows_mistyped_id_raises(spark):
+    """A Python value that does not fit the id column raises the same
+    schema error ``createDataFrame`` gave, instead of being coerced."""
+    store = _nullable_id_store(spark)
+    for bad in (["1"], [1.0], [True], [2**63]):
+        with pytest.raises((TypeError, ValueError)):
+            store.remove_rows(bad)
+
+
+def test_remove_rows_iterable_plans_no_join(spark):
+    from pyspark.sql import functions as F
+
+    df = spark.range(200).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.lit(1.0), F.col("id").cast("double")).alias("embedding"),
+    )
+    store = VecStore.from_df(df).remove_rows(list(range(100)))
+    plan = store.df._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "Exchange" not in plan, plan
+    assert "INSET" in plan.upper(), plan
+    assert store.count() == 100
